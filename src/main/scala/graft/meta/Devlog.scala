@@ -1,7 +1,9 @@
 package graft.meta
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.core.Conf.RuleNames
 
@@ -70,34 +72,43 @@ object Devlog {
   val RefreshedColumns: Seq[String] =
     Seq("last_updated_on", "version", "transparency_score")
 
-  /** S12 + J4 — update-in-place semantics over a Parquet registry: the
-    * matched campus row takes devlog values (falling back per column when
-    * the devlog lacks one); all other rows pass through untouched. Returns
-    * the new registry frame for overwrite-write by the caller. */
-  def updateRegistry(registry: DataFrame, latestDevlog: DataFrame,
-      campusId: String, processedBy: String, nowString: String): DataFrame = {
-    val dev = latestDevlog.head()
-    def devVal(c: String): Option[Any] =
-      if (latestDevlog.columns.contains(c) && !dev.isNullAt(dev.fieldIndex(c)))
-        Some(dev.get(dev.fieldIndex(c)))
-      else None
-    val matched = col("campus_id") === lit(campusId)
-    val refreshed = RefreshedColumns.foldLeft(registry) { (df, c) =>
-      devVal(c) match {
-        case Some(v) => df.withColumn(c,
-          when(matched, lit(v).cast(df.schema(c).dataType)).otherwise(col(c)))
-        case None => df
-      }
+  /** S12 + J4 — update-in-place semantics over a Parquet registry: every
+    * registry row whose `campus_id` has an entry in `latestByCampus` (one
+    * row per campus, keyed by `campus_id`) takes that entry's values,
+    * falling back per column when the entry lacks one; all other rows pass
+    * through untouched. One left join against the entries, so the plan has
+    * the same shape for one campus or a whole system. Returns the new
+    * registry frame for overwrite-write by the caller. */
+  def updateRegistry(registry: DataFrame, latestByCampus: DataFrame,
+      processedBy: String, nowString: String): DataFrame = {
+    val refreshed = RefreshedColumns.filter(latestByCampus.columns.contains)
+    val entries = latestByCampus.select(
+      col("campus_id").as("__dev_campus_id") +: refreshed.map(c => col(c).as(s"__dev_$c")): _*)
+    val matched = col("__dev_campus_id").isNotNull
+    val joined = registry.join(entries, col("campus_id") === col("__dev_campus_id"), "left")
+    refreshed.foldLeft(joined) { (df, c) =>
+      val dev = col(s"__dev_$c")
+      df.withColumn(c, when(dev.isNotNull, dev.cast(registry.schema(c).dataType)).otherwise(col(c)))
     }
-    refreshed
       .withColumn("etl_status", when(matched, lit("cleaned")).otherwise(col("etl_status")))
       .withColumn("processed_by", when(matched, lit(processedBy)).otherwise(col("processed_by")))
       .withColumn("last_processed_on", when(matched, lit(nowString)).otherwise(col("last_processed_on")))
+      .drop(entries.columns.toSeq: _*)
   }
 
-  /** F14 — the reference's timestamp format (ETL_pipeline.py:101). Injected
-    * as a parameter everywhere else so plans stay deterministic. */
-  def nowString(spark: SparkSession): String =
-    spark.range(1).select(
-      date_format(current_timestamp(), "yyyy-MM-dd HH:mm:ss")).head().getString(0)
+  /** The one-campus case of [[updateRegistry]]: the first row of
+    * `latestDevlog` refreshes the registry row of `campusId`. */
+  def updateRegistry(registry: DataFrame, latestDevlog: DataFrame,
+      campusId: String, processedBy: String, nowString: String): DataFrame =
+    updateRegistry(registry, latestDevlog.limit(1).withColumn("campus_id", lit(campusId)),
+      processedBy, nowString)
+
+  /** F14 — the reference's timestamp format (ETL_pipeline.py:101), read
+    * from this JVM's clock in the session time zone (no Spark job).
+    * Injected as a parameter everywhere else so plans stay deterministic. */
+  def nowString(spark: SparkSession): String = {
+    val zone = DateTimeUtils.getZoneId(spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    java.time.ZonedDateTime.now(zone)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+  }
 }

@@ -1,8 +1,11 @@
 package graft.etl
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.graft.JobRecorder
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.etl.EtlPipeline.RunResult
 
 /** End-to-end §3.1 trace over a miniature base dir: registry parquet + raw
   * tall-CSV MRF → extract → clean → devlog → registry refresh. */
@@ -131,5 +134,118 @@ class EtlPipelineSpec extends SparkSpec {
     val j1 = reg.filter(col("campus_id") === "j1").head()
     assert(j1.getAs[String]("version") == "3.0.0")
     assert(j1.getAs[String]("last_updated_on") == "2024-08-01")
+  }
+
+  /** A base dir with one system's raw MRFs (`file name -> content`) and a
+    * registry of `(campus_id, raw file, structure)` rows, in one file so
+    * that registry order is row order. */
+  private def systemBase(prefix: String, system: String, files: Map[String, String],
+      campuses: Seq[(String, String, String)]): (String, String) = {
+    val base = Files.createTempDirectory(prefix).toString
+    val slug = system.toLowerCase.replace(" ", "_")
+    Files.createDirectories(Paths.get(s"$base/data/raw data/$slug"))
+    files.foreach { case (name, body) =>
+      Files.writeString(Paths.get(s"$base/data/raw data/$slug/$name"), body)
+    }
+    val registryPath = s"$base/registry"
+    campuses.map { case (id, file, structure) =>
+      (id, system, s"Hospital $id", "30301", file, structure,
+        "", "", 0.0, "new", "", "", "1 Main St")
+    }.toDF("campus_id", "healthcare_system", "hospital_name", "zip_code",
+        "raw_filename", "structure", "last_updated_on", "version",
+        "transparency_score", "etl_status", "processed_by",
+        "last_processed_on", "hospital_address")
+      .coalesce(1).write.parquet(registryPath)
+    (base, registryPath)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("job-count guard: one tall-csv run stays within its Spark job budget") {
+    val (base, registryPath) = systemBase("graft-etl-jobs", "Acme Health",
+      Map("c1.csv" -> tallCsv), Seq(("c1", "c1.csv", "tall csv"), ("c2", "x.csv", "json")))
+    val (res, rec) = JobRecorder.during(spark.sparkContext)(
+      EtlPipeline.run(spark, registryPath, "c1", base, "tester"))
+    assert(res.get.cleanRows == 2)
+    // 14 = registry scan 2 (footer, collect), MRF metadata 1, CSV header 1,
+    // extract write 1, cleaned write 3 (dedup shuffle, cache build, write),
+    // quarantine write 1, summary 2, devlog 1, registry rewrite 2 (entries
+    // broadcast, write). A re-added count() or head() pushes it over.
+    assert(rec.jobs <= 14, s"${rec.jobs} jobs")
+  }
+
+  test("an extract with every code type rejected fails before any cleaned output") {
+    val rejected = tallCsv.replace(",CPT,", ",FOO,").replace(",MS-DRG,", ",BAR,")
+    val (base, registryPath) = systemBase("graft-etl-empty", "Acme Health",
+      Map("c1.csv" -> rejected), Seq(("c1", "c1.csv", "tall csv")))
+    val e = intercept[IllegalArgumentException] {
+      EtlPipeline.run(spark, registryPath, "c1", base, "tester")
+    }
+    assert(e.getMessage.contains("Extraction produced 0 canonical rows"))
+    assert(!Files.exists(Paths.get(s"$base/data/cleaned data")))
+    assert(!Files.exists(Paths.get(s"$base/data/logs/rules violations")))
+    val c1 = spark.read.parquet(registryPath).head()
+    assert(c1.getAs[String]("etl_status") == "new")
+  }
+
+  test("a campus whose every code fails format validation runs to an empty clean result") {
+    val invalid = tallCsv.replace("73721,CPT", "ABC,CPT").replace("85025,CPT", "XYZ,CPT")
+      .replace("470,MS-DRG", "47,MS-DRG")
+    val (base, registryPath) = systemBase("graft-etl-invalid", "Acme Health",
+      Map("c1.csv" -> invalid), Seq(("c1", "c1.csv", "tall csv")))
+    val res = EtlPipeline.run(spark, registryPath, "c1", base, "tester")
+    assert(res.extractedRows == 5)
+    assert(res.cleanRows == 0 && res.violationRows == 0 && res.duplicatesDropped == 0)
+    assert(res.transparencyScore == 0.0)
+  }
+
+  test("runSystem: failing campuses leave one registry rewrite for the rest; first failure rethrown") {
+    val (base, registryPath) = systemBase("graft-etl-fail", "Fail Sys",
+      Map("t1.csv" -> tallCsv, "w1.csv" -> wideCsv),
+      Seq(("t1", "t1.csv", "tall csv"), ("gone1", "missing1.json", "json"),
+        ("w1", "w1.csv", "wide csv"), ("gone2", "missing2.csv", "tall csv")))
+    val (out, rec) = JobRecorder.during(spark.sparkContext)(
+      EtlPipeline.runSystem(spark, registryPath, "fail sys", base, "t"))
+    assert(out.isFailure)
+    assert(out.failed.get.getMessage.contains("missing1.json"))
+    val registryWrites = rec.executionPlans.count(p =>
+      p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(s"$registryPath,"))
+    assert(registryWrites == 1)
+    val status = spark.read.parquet(registryPath).collect()
+      .map(r => r.getAs[String]("campus_id") -> r.getAs[String]("etl_status")).toMap
+    assert(status == Map("t1" -> "cleaned", "w1" -> "cleaned", "gone1" -> "new", "gone2" -> "new"))
+  }
+
+  test("runSystem gives the same results as run campus by campus") {
+    val tall2 = tallCsv.replace("Blood test", "Blood panel").replace("other,20.00", "other,25.00")
+    val json2 = jsonMrf.replace("\"MRI\"", "\"CT scan\"").replace("90.0", "95.0")
+    val files = Map("t1.csv" -> tallCsv, "t2.csv" -> tall2, "w1.csv" -> wideCsv,
+      "j1.json" -> jsonMrf, "j2.json" -> json2)
+    val campuses = Seq(("t1", "t1.csv", "tall csv"), ("j1", "j1.json", "json"),
+      ("w1", "w1.csv", "wide csv"), ("t2", "t2.csv", "tall csv"), ("j2", "j2.json", "json"))
+    val (sysBase, sysReg) = systemBase("graft-etl-sys", "Equiv Sys", files, campuses)
+    val (oneBase, oneReg) = systemBase("graft-etl-one", "Equiv Sys", files, campuses)
+
+    val together = EtlPipeline.runSystem(spark, sysReg, "equiv sys", sysBase, "t")
+    val apart = campuses.map(c => EtlPipeline.run(spark, oneReg, c._1, oneBase, "t"))
+    def relative(base: String)(r: RunResult): RunResult = r.copy(
+      extractedPath = r.extractedPath.stripPrefix(base),
+      cleanedPath = r.cleanedPath.stripPrefix(base),
+      quarantinePath = r.quarantinePath.stripPrefix(base))
+    assert(together.map(_.campusId) == campuses.map(_._1))
+    assert(together.map(relative(sysBase)) == apart.map(relative(oneBase)))
+
+    def csvRows(base: String, dir: String): Seq[String] =
+      sortedRows(spark.read.option("header", "true").csv(s"$base/data/$dir/equiv_sys/*"))
+    for (dir <- Seq("cleaned data", "logs/rules violations"))
+      assert(csvRows(sysBase, dir) == csvRows(oneBase, dir), dir)
+    def devlogRows(base: String): Seq[String] =
+      sortedRows(spark.read.json(s"$base/data/logs/devlogs/equiv_sys/*").drop("seq"))
+    assert(devlogRows(sysBase) == devlogRows(oneBase))
+    def registryRows(path: String): Seq[String] =
+      sortedRows(spark.read.parquet(path).drop("last_processed_on"))
+    assert(registryRows(sysReg) == registryRows(oneReg))
+    assert(spark.read.parquet(sysReg).filter(col("etl_status") === "cleaned").count() == 5)
   }
 }
